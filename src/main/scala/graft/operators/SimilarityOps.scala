@@ -609,8 +609,12 @@ object SimilarityOps {
       val fresh = new java.util.concurrent.CompletableFuture[AnyRef]()
       val existing = fitMemo.putIfAbsent(k, fresh)
       if (existing == null) {
-        try { out = f; fresh.complete(out) }
-        catch { case t: Throwable =>
+        try {
+          out = f
+          // a null result would read as "no claim yet" and rebuild forever
+          require(out != null, s"memoFit build for '$tag' returned null")
+          fresh.complete(out)
+        } catch { case t: Throwable =>
           fitMemo.remove(k, fresh); fresh.completeExceptionally(t); throw t }
       } else {
         try out = existing.join()

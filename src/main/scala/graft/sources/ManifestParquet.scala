@@ -6,12 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.filter2.predicate.FilterPredicate
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetInputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetWriteSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -31,16 +32,32 @@ import org.apache.spark.sql.types.StructType
   *     behind native parquet scans — handing whole [[org.apache.spark
   *     .sql.vectorized.ColumnarBatch]]es to DSv2 when every file in the
   *     scan is parquet, and per-row views otherwise. Column pruning is
-  *     applied at the reader (`initialize(path, columns)`), so a
-  *     2-column projection of a 20-column table decodes 2 columns.
+  *     applied at the reader (the requested schema), so a 2-column
+  *     projection of a 20-column table decodes 2 columns.
   *   - '''compact''': bins merge via [[ParquetFileWriter#appendFile]] —
   *     raw row-group copy, no decode/re-encode — preserving the
   *     byte-exactness the TSV format got from concatenation.
+  *
+  * Hadoop conf: the XML resources are parsed ONCE per JVM
+  * ([[baseConf]]); every write, footer read, merge and reader open works
+  * on a private copy of that parsed conf, so a file's fixed cost is its
+  * own I/O, not a resource parse.
   *
   * Legacy `.tsv` data files (the pre-round-6 demo encoding) remain
   * readable; only the extension dispatches the decoder.
   */
 object ManifestParquet {
+
+  /** The per-JVM parsed conf. Forced on creation so copies clone parsed
+    * properties instead of re-reading the resources. */
+  private lazy val baseConf: Configuration = {
+    val c = new Configuration()
+    c.size()
+    c
+  }
+
+  /** A private, mutable copy of [[baseConf]] for one file operation. */
+  private def freshConf(): Configuration = new Configuration(baseConf)
 
   /** Write-side Hadoop conf: every key [[ParquetWriteSupport.init]]
     * requires, set explicitly (there is no session to inherit from on an
@@ -48,7 +65,7 @@ object ManifestParquet {
     * (long/int/double/boolean/string only), so the rebase/timestamp
     * settings are inert but must be present. */
   private def writeConf(schema: StructType): Configuration = {
-    val conf = new Configuration()
+    val conf = freshConf()
     ParquetWriteSupport.setSchema(schema, conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
@@ -72,9 +89,9 @@ object ManifestParquet {
     * logic bug, not a retry — fail instead of overwriting.
     * `rowGroupBytes` (table property `write.parquet.row-group-bytes`)
     * sizes row groups — the skip granularity of the row-group-level
-    * predicate pushdown in [[openReadFiltered]]: smaller groups skip
-    * finer but carry more footer metadata; parquet's 128 MB default is
-    * the production sweet spot. */
+    * predicate pushdown in [[openRead]]: smaller groups skip finer but
+    * carry more footer metadata; parquet's 128 MB default is the
+    * production sweet spot. */
   def open(file: Path, schema: StructType,
       rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
       : ParquetWriter[InternalRow] = {
@@ -87,33 +104,26 @@ object ManifestParquet {
       .build()
   }
 
-  /** Open a vectorized reader over `columns` of `file` (in file-schema
-    * order; manifest append enforces a uniform schema, so file order ==
-    * table order). `returnBatches` flips between ColumnarBatch handoff
-    * (DSv2 columnar scan) and per-row views (row scan / streaming) —
-    * the DECODE is vectorized either way. */
-  def openRead(file: String, columns: Seq[String],
-      returnBatches: Boolean): VectorizedParquetRecordReader = {
-    val r = new VectorizedParquetRecordReader(/* useOffHeap = */ false, /* capacity = */ 4096)
-    try {
-      r.initialize(file, columns.asJava)
-      if (returnBatches) r.enableReturningBatches()
-      r
-    } catch { case t: Throwable => r.close(); throw t }
-  }
-
-  /** Open a vectorized reader over `file` with a parquet
-    * [[org.apache.parquet.filter2.predicate.FilterPredicate]] applied at
-    * ROW-GROUP granularity — the reader consults each group's
-    * stats/dictionary/bloom and never decodes (or reads) groups the
-    * predicate proves empty, exactly what native parquet scans do via
-    * `ParquetInputFormat`. Goes through the production
-    * `initialize(split, context)` path instead of the test-oriented
-    * `initialize(path, columns)`, which cannot carry a filter:
+  /** Open a vectorized reader over the `physSchema` columns of `file`:
+    * PHYSICAL column names under their TABLE types, in file-schema order
+    * (manifest append enforces a uniform schema, so file order == table
+    * order). The requested Spark types drive decoding, so a type-WIDENED
+    * table (int→long / float→double via ALTER COLUMN TYPE) reads old
+    * narrow files through Spark's widening updaters
+    * (`ParquetVectorUpdaterFactory.IntegerToLongUpdater` etc.) with no
+    * per-file branch. `returnBatches` flips between ColumnarBatch handoff
+    * (DSv2 columnar scan) and per-row views (row scan / streaming) — the
+    * DECODE is vectorized either way.
     *
-    *   - the requested schema arrives as a Spark StructType (PHYSICAL
-    *     column names) via `SPARK_ROW_REQUESTED_SCHEMA`, clipped against
-    *     the file schema by Spark's own `ParquetReadSupport`;
+    * `filter` applies at ROW-GROUP granularity — the reader consults
+    * each group's stats/dictionary/bloom and never decodes (or reads)
+    * groups the predicate proves empty, exactly what native parquet
+    * scans do via `ParquetInputFormat`. This is the production
+    * `initialize(split, context)` path:
+    *
+    *   - the requested schema arrives via `SPARK_ROW_REQUESTED_SCHEMA`,
+    *     clipped against the file schema by Spark's own
+    *     `ParquetReadSupport`;
     *   - the filter rides the conf under `ParquetInputFormat`'s key and
     *     is applied by `HadoopReadOptions` when the footer is read —
     *     each EXECUTOR task prunes from its own footer; the driver
@@ -127,30 +137,13 @@ object ManifestParquet {
     * Configuration-based `ParquetToSparkSchemaConverter` ctor
     * dereferences them without defaults. Values mirror
     * [[writeConf]]'s dialect (no binary-as-string, no INT96). */
-  def openReadFiltered(file: String, physSchema: StructType,
-      filter: org.apache.parquet.filter2.predicate.FilterPredicate,
-      returnBatches: Boolean): VectorizedParquetRecordReader =
-    openSplit(file, physSchema, Some(filter), returnBatches)
-
-  /** Split-based open WITHOUT a filter — used when the requested SPARK
-    * types must drive decoding rather than the file's own types: a
-    * type-WIDENED table (int→long / float→double via ALTER COLUMN TYPE)
-    * reads old narrow files through Spark's widening updaters
-    * (`ParquetVectorUpdaterFactory.IntegerToLongUpdater` etc.), which
-    * only engage on the requested-schema path. */
-  def openReadWidened(file: String, physSchema: StructType,
-      returnBatches: Boolean): VectorizedParquetRecordReader =
-    openSplit(file, physSchema, None, returnBatches)
-
-  private def openSplit(file: String, physSchema: StructType,
-      filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate],
+  def openRead(file: String, physSchema: StructType, filter: Option[FilterPredicate],
       returnBatches: Boolean): VectorizedParquetRecordReader = {
-    import org.apache.parquet.hadoop.ParquetInputFormat
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-    val conf = new Configuration()
+    val conf = freshConf()
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, physSchema.json)
-    conf.set(SQLConf.CASE_SENSITIVE.key, "false")
+    // physical names are exact identifiers: clip by exact name
+    conf.set(SQLConf.CASE_SENSITIVE.key, "true")
     conf.set(SQLConf.PARQUET_BINARY_AS_STRING.key, "false")
     conf.set(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, "true")
     conf.set(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, "true")
@@ -170,49 +163,33 @@ object ManifestParquet {
     } catch { case t: Throwable => r.close(); throw t }
   }
 
-  /** Top-level field names physically present in `file` (one footer
-    * read). The scan uses this under schema evolution to decide which
-    * requested columns exist in a given file and which must null-fill. */
-  def footerFields(file: String): Set[String] = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), new Configuration()))
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(_.getName).toSet
-    finally r.close()
+  /** One footer read of `file`. */
+  private def withFooter[T](file: String)(f: ParquetMetadata => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), freshConf()))
+    try f(r.getFooter) finally r.close()
   }
 
   /** Top-level field name → parquet primitive type name (one footer
-    * read) — the type-widening probe: a file whose physical primitive is
-    * NARROWER than the table type (INT32 under a BIGINT column after
-    * ALTER COLUMN TYPE) must decode through the widening reader. */
-  def footerPrimitiveTypes(file: String): Map[String, String] = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), new Configuration()))
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map { f =>
+    * read). Under schema evolution the scan uses it to decide which
+    * requested columns exist in a given file (the rest null-fill), and
+    * row-group filtering uses it as the type-widening probe: a file whose
+    * physical primitive is NARROWER than the table type (INT32 under a
+    * BIGINT column after ALTER COLUMN TYPE) is read unpruned. */
+  def footerPrimitiveTypes(file: String): Map[String, String] =
+    withFooter(file)(_.getFileMetaData.getSchema.getFields.asScala.map { f =>
       f.getName -> (if (f.isPrimitive) f.asPrimitiveType().getPrimitiveTypeName.name
         else "GROUP")
-    }.toMap
-    finally r.close()
-  }
+    }.toMap)
 
   /** Number of row groups in `file` (one footer read) — fixture/spec
     * support for the row-group skipping proofs. */
-  def rowGroupCount(file: String): Int = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), new Configuration()))
-    try r.getFooter.getBlocks.size
-    finally r.close()
-  }
+  def rowGroupCount(file: String): Int = withFooter(file)(_.getBlocks.size)
 
   /** Stable string form of a file's physical parquet schema — the
     * compaction grouping key under schema evolution (raw row-group
     * append requires byte-identical schemas within a bin). */
-  def footerSchemaString(file: String): String = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), new Configuration()))
-    try r.getFooter.getFileMetaData.getSchema.toString
-    finally r.close()
-  }
+  def footerSchemaString(file: String): String =
+    withFooter(file)(_.getFileMetaData.getSchema.toString)
 
   /** Merge `members` (all parquet, same schema by the manifest's append
     * invariant) into `dest` by raw row-group append — the compaction
@@ -221,13 +198,9 @@ object ManifestParquet {
     * carried over from the first member so readers of the merged file
     * see exactly what they saw on the originals. */
   def appendMerge(dest: Path, members: Seq[Path]): Unit = {
-    val conf = new Configuration()
-    val head = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(members.head.toString), conf))
-    val (schema, keyValueMeta) =
-      try (head.getFooter.getFileMetaData.getSchema,
-        head.getFooter.getFileMetaData.getKeyValueMetaData)
-      finally head.close()
+    val (schema, keyValueMeta) = withFooter(members.head.toString)(f =>
+      (f.getFileMetaData.getSchema, f.getFileMetaData.getKeyValueMetaData))
+    val conf = freshConf()
     val writer = new ParquetFileWriter(
       HadoopOutputFile.fromPath(new HPath(dest.toString), conf),
       schema, ParquetFileWriter.Mode.CREATE,

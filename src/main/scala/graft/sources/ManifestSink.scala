@@ -3782,8 +3782,8 @@ object ManifestSink {
           // int→long and float→double are the two conversions the
           // vectorized reader widens per value at scan
           // (ParquetVectorUpdaterFactory), so old narrow files never
-          // rewrite — the schema epoch bump routes them through the
-          // widening reader. Stats widen losslessly (integer min/max
+          // rewrite — every read decodes under the TABLE type, so they
+          // widen on read. Stats widen losslessly (integer min/max
           // already store Long). Anything lossy is refused.
           val name = single(u.fieldNames, "ALTER COLUMN TYPE")
           val f = schema.fields.find(_.name == name).getOrElse(
@@ -3964,23 +3964,21 @@ object ManifestSink {
 
   /** Flatten writer commit messages — single-file tasks send one
     * [[ManifestCommit]], partition-fanout tasks one [[ManifestCommitSet]]
-    * — into manifest entries. */
+    * — into manifest entries. A zero-row commit is an empty task, which
+    * wrote no file ([[ManifestDataWriter]] opens on its first row): it
+    * yields no entry. */
   private[sources] def commitEntries(messages: Iterable[WriterCommitMessage]): Seq[FileEntry] =
     messages.toSeq.flatMap {
       case c: ManifestCommit => Seq(c)
       case ManifestCommitSet(cs) => cs
       case _ => Seq.empty
-    }.map(c => FileEntry(c.fileName, c.rows, c.mins, c.maxs, c.parts,
+    }.filter(_.rows > 0L).map(c => FileEntry(c.fileName, c.rows, c.mins, c.maxs, c.parts,
       blooms = c.blooms, slows = c.slows, sups = c.sups,
       ndvs = c.ndvs, nulls = c.nulls, sorted = c.sorted, lineage = c.lineage,
       ndvSk = c.ndvSk, qsk = c.qsk))
 
   private[sources] def commitFileNames(messages: Iterable[WriterCommitMessage]): Seq[String] =
-    messages.toSeq.flatMap {
-      case c: ManifestCommit => Seq(c.fileName)
-      case ManifestCommitSet(cs) => cs.map(_.fileName)
-      case _ => Seq.empty
-    }
+    commitEntries(messages).map(_.name)
 
   /** What a [[compact]] call did: the version it published (or the
     * current one if nothing needed rewriting) and the file-count move. */
@@ -4074,6 +4072,8 @@ object ManifestSink {
             out.write(row); kept += 1; stats.add(row); remap.add(pos)
           }
         } finally out.close()
+        // every row deleted: the entry drops below, and so does its file
+        if (kept == 0L) Files.deleteIfExists(root.resolve(newName))
         rewritten += 1
         FileEntry(newName, kept, stats.intMins, stats.intMaxs, e.parts,
           blooms = stats.blooms, slows = stats.strLowers, sups = stats.strUppers,
@@ -4479,18 +4479,7 @@ object ManifestSink {
         if (!dv.contains(pos)) { w.write(row); moved += 1 }
       }
     }
-    val commits = w.commit() match {
-      case ManifestCommitSet(cs) => cs
-      case c: ManifestCommit => Seq(c)
-      case _ => Seq.empty
-    }
-    commits.filter(_.rows == 0L)
-      .foreach(c => Files.deleteIfExists(root.resolve(c.fileName)))
-    val migrated0 = commits.filter(_.rows > 0L).map(c =>
-      FileEntry(c.fileName, c.rows, c.mins, c.maxs, c.parts,
-        blooms = c.blooms, slows = c.slows, sups = c.sups, specId = st.specId,
-        ndvs = c.ndvs, nulls = c.nulls, sorted = c.sorted, ndvSk = c.ndvSk,
-        qsk = c.qsk))
+    val migrated0 = commitEntries(Seq(w.commit())).map(_.copy(specId = st.specId))
     // the layout migration re-routes rows across files: a non-preserving
     // rewrite, so migrated rows are NEW rows to lineage (fresh ids)
     val (migrated, nextRid) =
@@ -4627,22 +4616,14 @@ object ManifestSink {
       val bc = st.bloomCols
       val qc = quantColsOf(st.props)
       val rgb = rowGroupBytesOf(st.props)
-      sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val commits = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
         val w = new ManifestDataWriter(rootStr, fileSchema,
           s"data-zorder-p$pid-${java.util.UUID.randomUUID()}.parquet", fileParts,
           cmap, bc, rgb, quantCols = qc)
         rows.foreach(w.write)
-        w.commit() match {
-          case m: ManifestCommit if m.rows > 0L => Iterator.single(m)
-          case m: ManifestCommit =>
-            Files.deleteIfExists(Paths.get(rootStr).resolve(m.fileName))
-            Iterator.empty
-          case _ => Iterator.empty
-        }
-      }.collect().toSeq.map(c => FileEntry(c.fileName, c.rows, c.mins, c.maxs, c.parts,
-        blooms = c.blooms, slows = c.slows, sups = c.sups, specId = st.specId,
-        ndvs = c.ndvs, nulls = c.nulls, sorted = c.sorted, ndvSk = c.ndvSk,
-        qsk = c.qsk))
+        Iterator.single(w.commit())
+      }.collect()
+      commitEntries(commits).map(_.copy(specId = st.specId))
     }
     // a z-order rewrite REORDERS rows across files: non-preserving, so
     // the rewritten rows are NEW rows to lineage (fresh ids)
@@ -5130,8 +5111,7 @@ object ManifestSink {
   }
 
   /** Parquet primitive a TABLE type stores as (manifest tables carry
-    * exactly these) — shared by the scan factory's widening probe and
-    * [[foreachRow]]'s. */
+    * exactly these) — the scan's row-group-filter widening probe. */
   private[sources] def expectedPrimitiveOf(dt: DataType): String = dt match {
     case LongType => "INT64"
     case IntegerType => "INT32"
@@ -5148,48 +5128,32 @@ object ManifestSink {
     if (file.toString.endsWith(".tsv")) {
       Files.readAllLines(file).forEach(l => f(decode(l, schema)))
     } else {
-      val phys = schema.fieldNames.map(c => colMap.getOrElse(c, c))
-      // evolved tables probe the footer for BOTH presence and physical
-      // primitive: a file written before ALTER COLUMN TYPE stores the
-      // NARROW primitive, and the table-typed accessors the callers use
-      // (evalFilter, the rewrite writer) would read garbage off
-      // file-typed vectors — such files must decode through the
-      // widening reader, exactly like the scan path
-      val types: Map[String, String] =
-        if (evolved || colMap.nonEmpty)
-          ManifestParquet.footerPrimitiveTypes(file.toString)
-        else phys.map(p => p -> "").toMap // "" = skip the widening check
-      def widened: Boolean = schema.fields.exists(fd =>
-        types.get(colMap.getOrElse(fd.name, fd.name)).exists(t =>
-          t.nonEmpty && t != "GROUP" && t != expectedPrimitiveOf(fd.dataType)))
-      def physSchemaOf(present: Seq[String]): StructType = {
-        val byPhys = schema.fields.map(fd =>
-          (colMap.getOrElse(fd.name, fd.name), fd)).toMap
-        StructType(present.map(p => byPhys(p).copy(name = p)))
-      }
-      if (phys.forall(types.contains)) {
-        val r =
-          if (widened) ManifestParquet.openReadWidened(file.toString,
-            physSchemaOf(phys.toSeq), returnBatches = false)
-          else ManifestParquet.openRead(file.toString, phys.toSeq,
-            returnBatches = false)
-        try while (r.nextKeyValue()) f(r.getCurrentValue.asInstanceOf[InternalRow])
-        finally r.close()
-      } else {
-        val present = phys.filter(types.contains)
-        val posOf = present.zipWithIndex.toMap
-        val mapping = phys.map(p => posOf.getOrElse(p, -1))
-        val view = new MappedInternalRow(mapping, schema.fields.map(_.dataType),
-          existenceDefaults(schema))
-        val r =
-          if (widened) ManifestParquet.openReadWidened(file.toString,
-            physSchemaOf(present.toSeq), returnBatches = false)
-          else ManifestParquet.openRead(file.toString, present.toSeq,
-            returnBatches = false)
-        try while (r.nextKeyValue()) {
-          view.row = r.getCurrentValue.asInstanceOf[InternalRow]; f(view)
-        } finally r.close()
-      }
+      val physSchema = toPhysicalSchema(schema, colMap)
+      // evolved tables probe the footer for presence: a file written
+      // before ADD COLUMN lacks the column, which null-fills. The reader
+      // decodes under TABLE types, so a file written before ALTER COLUMN
+      // TYPE widens on read and the table-typed accessors the callers use
+      // (evalFilter, the rewrite writer) see table-typed values
+      val present =
+        if (!evolved && colMap.isEmpty) physSchema
+        else {
+          val inFile = ManifestParquet.footerPrimitiveTypes(file.toString)
+          StructType(physSchema.fields.filter(fd => inFile.contains(fd.name)))
+        }
+      // null = every column present, rows pass through unmapped
+      val view =
+        if (present.length == physSchema.length) null
+        else {
+          val posOf = present.fieldNames.zipWithIndex.toMap
+          new MappedInternalRow(physSchema.fieldNames.map(p => posOf.getOrElse(p, -1)),
+            schema.fields.map(_.dataType), existenceDefaults(schema))
+        }
+      val r = ManifestParquet.openRead(file.toString, present, None,
+        returnBatches = false)
+      try while (r.nextKeyValue()) {
+        val row = r.getCurrentValue.asInstanceOf[InternalRow]
+        if (view == null) f(row) else { view.row = row; f(view) }
+      } finally r.close()
     }
 
   /** The delete-filter dialect: equality/range/in/null tests on table
@@ -6063,13 +6027,7 @@ class ManifestReplaceDataWrite(root: Path, schema: StructType,
       bloomCols, rowGroupBytes, partSpec, quantCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val (live0, empty) = ManifestSink.commitEntries(messages).partition(_.rows > 0L)
-    val live = live0.map(_.copy(specId = specId))
-    // a task whose every row was deleted (or that received no rows from
-    // the rewrite) leaves a footer-only file: drop it instead of
-    // publishing an entry that would cost a scan partition forever
-    empty.foreach(e => Files.deleteIfExists(root.resolve(e.name)))
-    op.commitReplace(live)
+    op.commitReplace(ManifestSink.commitEntries(messages).map(_.copy(specId = specId)))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -6421,7 +6379,12 @@ private[sources] class ShiftedInternalRow(offset: Int) extends InternalRow {
   * min/max stats are still collected INLINE during the write — one pass,
   * no footer re-read — and published in the manifest entry, which keeps
   * file skipping metadata-only at plan time (the footer carries the same
-  * ranges for row-group-level use by the vectorized reader). */
+  * ranges for row-group-level use by the vectorized reader).
+  *
+  * The file is created on the FIRST row: a task that receives no rows
+  * writes no file and commits a zero-row message, which
+  * [[ManifestSink.commitEntries]] drops — a small epoch or a
+  * repartitioned tiny frame publishes only the files holding rows. */
 class ManifestDataWriter(rootStr: String, schema: StructType, fileName: String,
     parts: Map[String, String] = Map.empty,
     colMap: Map[String, String] = Map.empty,
@@ -6471,7 +6434,8 @@ class ManifestDataWriter(rootStr: String, schema: StructType, fileName: String,
   // are physical).
   private val stats =
     new ManifestSink.FileStatsCollector(schema, bloomCols, sortCols, quantCols)
-  private lazy val out = {
+  private var out: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = null
+  private def openOut(): org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     Files.createDirectories(root)
     // data files carry PHYSICAL column names — immutable across renames
     val phys = ManifestSink.toPhysicalSchema(schema, colMap)
@@ -6479,19 +6443,20 @@ class ManifestDataWriter(rootStr: String, schema: StructType, fileName: String,
       ManifestParquet.open(root.resolve(fileName), phys, b))
   }
   override def write(record: InternalRow): Unit = {
+    if (out == null) out = openOut()
     out.write(record)
     lineageCell.foreach(noteLineage) // position = rows, pre-increment
     rows += 1
     stats.add(record)
   }
   override def commit(): WriterCommitMessage = {
-    out.close() // forces creation even for an empty task: footer-only file
+    if (out != null) out.close()
     ManifestCommit(fileName, rows, stats.intMins, stats.intMaxs, parts,
       stats.blooms, stats.strLowers, stats.strUppers,
       stats.intNdvs, stats.nullCounts, stats.sortedBy, capturedLineage,
       stats.ndvSketches, stats.quantSketches)
   }
-  override def abort(): Unit = {
+  override def abort(): Unit = if (out != null) {
     try out.close() catch { case _: Throwable => () }
     Files.deleteIfExists(root.resolve(fileName))
   }
@@ -7730,8 +7695,8 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     // schema evolution of KEY columns: a governed file may predate an
     // ADD COLUMN (that key component is NULL there — equality never
     // matches, the record contributes nothing to this file) or an ALTER
-    // COLUMN TYPE widening (narrow physical primitive — decode through
-    // the widening reader, table-typed)
+    // COLUMN TYPE widening (narrow physical primitive — the reader
+    // decodes table-typed)
     val fileTypes: Option[Map[String, String]] =
       if (evolved) Some(ManifestParquet.footerPrimitiveTypes(p.file)) else None
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -7741,18 +7706,11 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     gov.filter(a =>
       fileTypes.forall(t => a.cols.forall(c => t.contains(physical(c)))))
       .groupBy(_.cols).foreach { case (cols, dels) =>
-        val physCols = cols.map(physical)
         val dts = dels.head.dataTypes
-        val needsWiden = fileTypes.exists(t =>
-          physCols.zip(dts).exists { case (pc, dt) =>
-            t.get(pc).exists(pt => pt != "GROUP" &&
-              pt != ManifestSink.expectedPrimitiveOf(dt)) })
-        val reader =
-          if (needsWiden) ManifestParquet.openReadWidened(p.file,
-            StructType(physCols.zip(dts).map { case (pc, dt) =>
-              org.apache.spark.sql.types.StructField(pc, dt) }),
-            returnBatches = false)
-          else ManifestParquet.openRead(p.file, physCols, returnBatches = false)
+        val reader = ManifestParquet.openRead(p.file,
+          StructType(cols.map(physical).zip(dts).map { case (pc, dt) =>
+            org.apache.spark.sql.types.StructField(pc, dt) }),
+          None, returnBatches = false)
         val keySets = dels.map(_.typedKeys)
         try {
           var pos = -1L
@@ -7812,35 +7770,23 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
 
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
-  /** (physical names present in the file, out-index → present-index map
-    * with -1 for null-fill, file-needs-WIDENING flag), or None for the
-    * uniform fast path. Widening: a file written before ALTER COLUMN
-    * TYPE carries the NARROW primitive (INT32 under a BIGINT column) —
-    * it must decode through the requested-schema reader whose updaters
-    * widen per value; reading it with file-typed vectors would hand
-    * Spark ints where longs are promised. */
-  private def filePlan(file: String): Option[(Seq[String], Array[Int], Boolean)] =
+  /** (the present columns' physical schema, out-index → present-index
+    * map with -1 for null-fill) when the file predates an ADD COLUMN, or
+    * None for the uniform fast path. A file written before ALTER COLUMN
+    * TYPE (the NARROW primitive, INT32 under a BIGINT column) takes the
+    * fast path too: the reader decodes under TABLE types, whose updaters
+    * widen per value. */
+  private def filePlan(file: String): Option[(StructType, Array[Int])] =
     if (!evolved) None
     else {
       val types = ManifestParquet.footerPrimitiveTypes(file)
-      val phys = dataSchema.fieldNames.map(physical)
-      val widened = dataSchema.fields.exists(f =>
-        types.get(physical(f.name)).exists(t =>
-          t != "GROUP" && t != ManifestSink.expectedPrimitiveOf(f.dataType)))
-      if (phys.forall(types.contains) && !widened) None
+      val present = StructType(physDataSchema.fields.filter(f => types.contains(f.name)))
+      if (present.length == physDataSchema.length) None
       else {
-        val present = phys.filter(types.contains)
-        val posOf = present.zipWithIndex.toMap
-        Some((present.toSeq, phys.map(p => posOf.getOrElse(p, -1)), widened))
+        val posOf = present.fieldNames.zipWithIndex.toMap
+        Some((present, physDataSchema.fieldNames.map(p => posOf.getOrElse(p, -1))))
       }
     }
-
-  /** Present columns as a physical-named StructType under TABLE types —
-    * the widening reader's requested schema. */
-  private def physPresentSchema(present: Seq[String]): StructType = {
-    val byPhys = dataSchema.fields.map(f => physical(f.name) -> f).toMap
-    StructType(present.map(p => byPhys(p).copy(name = p)))
-  }
 
   /** Sequential chain over a bin's members — each member gets its own
     * ordinary reader (opened lazily, closed before the next opens), so
@@ -7931,22 +7877,15 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     }
     else filePlan(p.file) match {
       case None => new PartitionReader[InternalRow] {
-        private val reader = rgFilterFor(p) match {
-          case Some(f) =>
-            ManifestParquet.openReadFiltered(p.file, physDataSchema, f,
-              returnBatches = false)
-          case None => ManifestParquet.openRead(p.file,
-            dataSchema.fieldNames.map(physical).toSeq, returnBatches = false)
-        }
+        private val reader = ManifestParquet.openRead(p.file, physDataSchema,
+          rgFilterFor(p), returnBatches = false)
         override def next(): Boolean = reader.nextKeyValue()
         override def get(): InternalRow = reader.getCurrentValue.asInstanceOf[InternalRow]
         override def close(): Unit = reader.close()
       }
-      case Some((present, mapping, widened)) => new PartitionReader[InternalRow] {
+      case Some((present, mapping)) => new PartitionReader[InternalRow] {
         private val reader =
-          if (widened) ManifestParquet.openReadWidened(p.file,
-            physPresentSchema(present), returnBatches = false)
-          else ManifestParquet.openRead(p.file, present, returnBatches = false)
+          ManifestParquet.openRead(p.file, present, None, returnBatches = false)
         private val view = new MappedInternalRow(mapping,
           dataSchema.fields.map(_.dataType), existDefaults)
         override def next(): Boolean = reader.nextKeyValue()
@@ -8041,22 +7980,15 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     val p = partition.asInstanceOf[ManifestFilePartition]
     filePlan(p.file) match {
       case None => new PartitionReader[ColumnarBatch] {
-        private val reader = rgFilterFor(p) match {
-          case Some(f) =>
-            ManifestParquet.openReadFiltered(p.file, physDataSchema, f,
-              returnBatches = true)
-          case None => ManifestParquet.openRead(p.file,
-            dataSchema.fieldNames.map(physical).toSeq, returnBatches = true)
-        }
+        private val reader = ManifestParquet.openRead(p.file, physDataSchema,
+          rgFilterFor(p), returnBatches = true)
         override def next(): Boolean = reader.nextKeyValue()
         override def get(): ColumnarBatch = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
         override def close(): Unit = reader.close()
       }
-      case Some((present, mapping, widened)) => new PartitionReader[ColumnarBatch] {
+      case Some((present, mapping)) => new PartitionReader[ColumnarBatch] {
         private val reader =
-          if (widened) ManifestParquet.openReadWidened(p.file,
-            physPresentSchema(present), returnBatches = true)
-          else ManifestParquet.openRead(p.file, present, returnBatches = true)
+          ManifestParquet.openRead(p.file, present, None, returnBatches = true)
         // constant vectors for absent columns — the column's
         // EXISTS_DEFAULT when one exists, else all-null — shared across
         // batches (capacity covers the reader's 4096-row batches)

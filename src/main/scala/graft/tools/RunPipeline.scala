@@ -22,6 +22,11 @@ object RunPipeline {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine Bench and Verify measure: AQE's coalesce start and the
+      // graft planner extensions
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        (cpus.toInt * 8).toString)
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(run(spark, sfDir, outDir))

@@ -96,4 +96,22 @@ class StagingSpec extends AnyFunSuite {
     }
     assert(built.get() == 1024)
   }
+
+  test("memoFit fails loudly when a build returns null instead of rebuilding forever") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val spark = TestSpark.spark
+    val builds = new AtomicInteger
+    val attempt = Future(scala.util.Try(
+      graft.operators.SimilarityOps.memoFit[AnyRef](spark, "memo-null", "fit") {
+        builds.incrementAndGet(); null
+      }))
+    val result = Await.result(attempt, 60.seconds)
+    assert(result.failed.toOption.exists(_.getMessage.contains("returned null")),
+      s"got $result")
+    assert(builds.get() == 1)
+    // the failed claim is gone: the next caller builds afresh
+    assert(graft.operators.SimilarityOps.memoFit[String](spark, "memo-null", "fit")("ok") == "ok")
+  }
 }

@@ -33,6 +33,52 @@ class ManifestCasSpec extends AnyFunSuite {
     p
   }
 
+  /** Every `data-*` file in `root` with its parquet row count. */
+  private def dataFileRows(root: Path): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(root)
+    val names = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("data-")).toSeq finally s.close()
+    names.map { n =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(root.resolve(n).toString),
+          new org.apache.hadoop.conf.Configuration()))
+      try n -> r.getRecordCount finally r.close()
+    }.toMap
+  }
+
+  test("an append writes and publishes files only for tasks that received rows") {
+    val root = tmp()
+    val df = spark.range(3).repartition(8)
+    val nonEmptyTasks = df.select(spark_partition_id()).distinct().count()
+    df.write.format(fmt).option("path", root.toString).mode("append").save()
+    val entries = ManifestSink.committedEntries(root)
+    assert(entries.size == nonEmptyTasks && entries.size <= 3,
+      s"one entry per non-empty task, got ${entries.map(_.rows)}")
+    assert(entries.forall(_.rows > 0L) && entries.map(_.rows).sum == 3L)
+    val files = dataFileRows(root)
+    assert(files.keySet == entries.map(_.name).toSet, s"unpublished files: $files")
+    assert(files.values.forall(_ > 0L), s"zero-row data files: $files")
+    assert(spark.read.format(fmt).option("path", root.toString).load()
+      .as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("overwrite with an empty frame leaves a readable, empty table with its schema") {
+    val root = tmp()
+    val dir = root.toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      .write.format(fmt).option("path", dir).mode("overwrite").save()
+    spark.range(0).select($"id", lit("x").as("s")).repartition(4)
+      .write.format(fmt).option("path", dir).mode("overwrite").save()
+    val back = spark.read.format(fmt).option("path", dir).load()
+    assert(back.schema.map(f => (f.name, f.dataType)) ==
+      Seq(("id", LongType), ("s", StringType)))
+    assert(back.count() == 0L && back.collect().isEmpty)
+    assert(ManifestSink.committedEntries(root).isEmpty)
+    assert(ManifestSink.currentVersion(root) == 2L)
+  }
+
   test("publish is compare-and-swap: second writer at the same version loses loudly") {
     val root = tmp()
     ManifestSink.publish(root, 0L, "{}\nwinner\t1\t\t")

@@ -58,6 +58,34 @@ class ManifestStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("an epoch with empty tasks publishes only the files holding rows") {
+    val root = tmp()
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[StreamRec]
+    val q = ms.toDF().repartition(8).writeStream.format(fmt)
+      .option("path", root.toString)
+      .option("checkpointLocation", tmp().toString)
+      .outputMode("append").start()
+    try {
+      ms.addData(StreamRec(1L, "a", 0.5), StreamRec(2L, "b", 1.5))
+      q.processAllAvailable()
+      ms.addData(StreamRec(3L, "c", 2.5))
+      q.processAllAvailable()
+      val entries = ManifestSink.committedEntries(root)
+      // 8 tasks per epoch, 3 rows in all: at most one file per row
+      assert(entries.nonEmpty && entries.size <= 3 && entries.forall(_.rows > 0L),
+        s"got ${entries.map(e => e.name -> e.rows)}")
+      assert(dataFiles(root) == entries.map(_.name).toSet,
+        "no file may exist for an empty task")
+      assert(spark.read.format(fmt).option("path", root.toString).load()
+        .as[StreamRec].collect().map(_.id).sorted.toSeq == Seq(1L, 2L, 3L))
+      assert(ManifestSink.currentVersion(root) == 2L)
+      val markers = ManifestSink.epochMarkers(root)
+      assert(markers.size == 1 && markers.head._2 == 1L,
+        s"expected high-water epoch 1 for the query, got $markers")
+    } finally q.stop()
+  }
+
   test("a replayed epoch is a pure no-op: no new version, duplicate files swept") {
     val root = tmp()
     val schema = StructType(Seq(StructField("id", LongType)))
